@@ -18,13 +18,42 @@ Scale notes (targets a 1000-executor cluster even though tests run local):
   (`hadoop-streaming/.../typedbytes/TypedBytesInput.java:34`) but columnar.
 - Session timezone pinned UTC so timestamp semantics are stable across
   engines (and match the DuckDB oracle).
+
+Driver JVM start-up (the reference's answer to JVM start cost was uber mode
+and JVM reuse, `MRJobConfig.java:662`): the JVM that ``get_session`` starts
+maps a class-data-sharing archive of the ~12-14 k Spark classes it would
+otherwise load one by one, which roughly halves ``get_session`` plus the
+first action (``cds.py`` has the lifecycle). There is no option for it.
+- The cache is ``$XDG_CACHE_HOME/hadoop_spark/cds/`` (``~/.cache/...`` when
+  unset): one archive of ~140-220 MB per JDK build, Spark jar set and
+  driver classpath setting, plus an empty directory used as
+  ``SPARK_CONF_DIR``.
+- The first start after a JDK or Spark change is a cold run: its JVM
+  records the classes it loads, which makes that session start up to 2×
+  slower. At exit the process waits ~10 s for its JVM to write the
+  archive, checks it and publishes it. If that dump leaves no archive (the
+  process or its JVM was killed), later starts go without CDS for that
+  key rather than dump again.
+- CDS is declined when ``SPARK_CONF_DIR``, ``HADOOP_CONF_DIR``,
+  ``YARN_CONF_DIR`` or ``SPARK_DIST_CLASSPATH`` is set, when the default
+  conf dir holds any file but ``*.template``, or when a JVM already runs in
+  this process (pyspark reuses it for every later session), and after a
+  failed dump as above.
+- ``jvm_start_info()`` tells what happened. A rejected or damaged archive
+  never fails a session: it is reported with a warning, removed, and
+  written afresh. To clear the cache: ``rm -r ~/.cache/hadoop_spark/cds``.
+- Sessions built without ``get_session`` (the external driver's vanilla
+  session in ``scripts/drive_contract.py``) are unaffected.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from hadoop_spark import cds
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -68,8 +97,27 @@ def get_session(
         # cogroup. TCP transport has none of this.
         .config("spark.python.unix.domain.socket.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # One JVM serves every session of a Python process; CDS applies only when
+    # this call starts it.
+    new_jvm = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    if new_jvm:
+        opts = cds.java_options(conf.get("spark.driver.extraClassPath", ""))
+        if opts:
+            # defaultJavaOptions, so a caller's extraJavaOptions cannot drop them
+            key = "spark.driver.defaultJavaOptions"
+            conf[key] = f"{opts} {conf.get(key, '')}".rstrip()
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if new_jvm:
+        cds.record_start(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def jvm_start_info() -> dict:
+    """How the driver JVM of this process started: ``archive`` (path or None),
+    ``mode`` (``dump`` | ``use`` | ``declined``), ``mapped`` (the JVM really
+    mapped the archive, read from its ``-Xlog:cds`` file) and ``reason``."""
+    return {k: cds.status[k] for k in ("archive", "mode", "mapped", "reason")}

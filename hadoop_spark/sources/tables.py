@@ -11,6 +11,8 @@ capability the reference had to hand-build per-format
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLE_NAMES = (
@@ -67,6 +69,9 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
+_footer_probe_warned = False
+
+
 def fanout_small(df: DataFrame) -> DataFrame:
     """Spread a small-file scan across the cluster for CPU-heavy map work.
 
@@ -103,8 +108,16 @@ def fanout_small(df: DataFrame) -> DataFrame:
                     break
             if total_rgs < target:
                 return df.repartition(target)
-    except Exception:  # noqa: BLE001 — a heuristic must never fail the query
-        pass
+    except Exception as e:  # noqa: BLE001 — a heuristic must never fail the query
+        global _footer_probe_warned
+        if not _footer_probe_warned:
+            _footer_probe_warned = True
+            warnings.warn(
+                f"fanout_small: parquet footer probe failed ({type(e).__name__}: {e}); "
+                "giant-row-group scans are no longer spread",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return df
 
 

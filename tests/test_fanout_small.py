@@ -87,3 +87,34 @@ def test_many_splits_many_row_groups_is_noop(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
         spark.conf.set("spark.sql.files.openCostInBytes", old_open)
+
+
+def test_failed_footer_probe_warns_once_and_keeps_plan(spark, tmp_path, monkeypatch):
+    # The probe's failure must be visible, not silent, and the scan must
+    # pass through untouched.
+    import warnings
+
+    from hadoop_spark.sources import tables
+
+    def broken(*args, **kwargs):
+        raise OSError("footer unreadable")
+
+    path = _write_parquet(tmp_path, "probe.parquet", 50_000, row_group_size=50_000)
+    monkeypatch.setattr(pq, "ParquetFile", broken)
+    monkeypatch.setattr(tables, "_footer_probe_warned", False)
+    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    old_open = spark.conf.get("spark.sql.files.openCostInBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "65536")
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            outs = [fanout_small(df), fanout_small(df)]
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
+        spark.conf.set("spark.sql.files.openCostInBytes", old_open)
+    assert all(out is df for out in outs)
+    assert len(caught) == 1
+    assert "OSError" in str(caught[0].message) and "footer unreadable" in str(caught[0].message)
