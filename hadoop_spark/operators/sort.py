@@ -124,12 +124,12 @@ def global_rank(df: DataFrame, *cols: Column | str, out: str = "rank") -> DataFr
     # until session end because an in-operator unpersist would fire
     # before the lazy consumer runs. Callers running many queries in one
     # session should drain with spark.catalog.clearCache() AFTER
-    # consuming results, at whatever cadence fits — bench.py clears per
-    # query (timing isolation), scripts/drive_contract.py every 25
-    # queries (adjacent queries legitimately reuse plan-equal cached
-    # intermediates; a per-query clear measured ~20% slower for no extra
-    # safety). Never clear while a result built on these operators is
-    # still lazy. Entries are MEMORY_AND_DISK: worst case they spill,
+    # consuming results, at whatever cadence fits — perfbench's runner
+    # clears per query (timing isolation), scripts/drive_contract.py
+    # every 25 queries (adjacent queries legitimately reuse plan-equal
+    # cached intermediates; a per-query clear measured ~20% slower for no
+    # extra safety). Never clear while a result built on these operators
+    # is still lazy. Entries are MEMORY_AND_DISK: worst case they spill,
     # never OOM.
     with_pid = parted.withColumn("__pid", F.spark_partition_id()).persist()
     sizes = with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))

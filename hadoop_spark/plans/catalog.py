@@ -8,9 +8,9 @@ hash, so:
 
 - every computed column is aliased identically on both sides;
 - floating-point aggregates are computed via per-row DOUBLE arithmetic
-  (IEEE-exact, engine-independent) quantized with a cast to DECIMAL before
+  (IEEE-exact, engine-independent) quantized to an integer grid before
   SUM (exact integer arithmetic), then cast back to DOUBLE — bit-identical
-  across Spark and DuckDB with no rounding heuristics;
+  across Spark and DuckDB with no rounding heuristics (conventions below);
 - anything order-sensitive (top-k, ranks) ties-breaks on a unique key.
 """
 
@@ -47,247 +47,22 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# The driver's correctness run checks the FIRST 50 registry entries per
-# round (rotation ledger: COVERAGE.md; the ledger CLOSED in r9 — every
-# catalog query has a green driver row). Round 10 executes the first
-# post-ledger maintenance window under the policy below: the r10
-# quantization-class audit (the r9 verdict's top task) changed the
-# builder AND oracle of 56 queries (DECIMAL finalizations of computed
-# quotients deleted on both sides; generic-addend sums moved from dsum to
-# the new engine-exact fsum), and operators/pipe.py changed (typed-bytes
-# EOF hardening + shlex interpreter split), touching the 5 pipe-family
-# queries. With the 2 owed re-verifications (`seasonal_decompose` — its
-# r9 fix shipped after its r8 driver row — and `calibration_bins`), the
-# mandatory set is 62 for 50 slots: the 50 below land this round (every
-# fsum-converted query included — their output VALUES changed), and the
-# 12-query remainder is _R10_CARRYOVER, owed as mandatory rows at the
-# TOP of the r11 window (plus `triangle_count`, whose DuckDB oracle was
-# reformulated to unblock the x10 strict sweep). Every changed query was
-# builder-verified
-# at sf0.001/0.01/0.1 strict on the day it changed; the
-# carryover queries additionally ride the end-of-round full strict
-# sweeps. No r10 catalog additions: priority 1 (changed queries) already
-# over-subscribes the window.
-_R10_OWED = [
-    "seasonal_decompose",
-    "calibration_bins",
-]
-
-_R10_AUDIT = [
-    # value-changing fsum conversions + quantization-formula changes
-    "pca_power_iteration",
-    "label_centroids",
-    "silhouette_simplified",
-    "embedding_dim_stats",
-    "jl_norm_distortion",
-    "bigram_lm_score",
-    "source_tv_divergence",
-    "bm25_scores",
-    "price_index",
-    "pagerank",
-    "zscore_by_group",
-    "chi2_independence",
-    "tb_vector_pipe",
-    # raw-quotient conversions (DECIMAL finalizations deleted)
-    "ewma_smooth",
-    "linreg_per_group",
-    "anomaly_mad",
-    "linreg_residuals",
-    "daily_metric_corr",
-    "hourly_burst_flags",
-    "autocorrelation",
-    "event_type_diversity",
-    "kaplan_meier",
-    "ridge_regression_2f",
-    "ks_distance",
-    "rank_auc",
-    "target_encoding",
-    "lorenz_curve",
-    "lead_lag_corr",
-    "spearman_rho",
-    "rank_stability",
-    "cluster_purity",
-    "centroid_distances",
-    "decision_stump",
-    "quality_classifier",
-    "chi2_terms",
-    "dataset_card",
-    "degree_assortativity",
-    "clustering_coefficient",
-    "graph_modularity",
-    "seasonal_baseline",
-    "year_over_year_growth",
-    "topn_with_other",
-    "countmin_error_eval",
-    "word_lift",
-]
-
-# operators/pipe.py changed this round (typed-bytes read_exact + shlex);
-# tb_vector_pipe (also audit-changed) is listed above.
-_R10_PIPE = [
-    "pipe_typedbytes",
-    "pipe_shipped_script",
-    "pipe_wordcount",
-    "pipe_counter_rows",
-]
-
-# Changed this round but displaced from the 50-slot window — MANDATORY at
-# the top of the r11 window (each was 3-SF strict-verified by the builder
-# this round and is covered by the end-of-round full strict sweeps).
-_R10_CARRYOVER = [
-    "triangle_count",  # oracle reformulated r10 (equi-join closing probe)
-    # operators/similarity.py block_near_dup_pairs strip-chunked r10 (the
-    # x100 OOM fix — bit-identical kernel chunking, 3-SF re-verified):
-    "dedup_embedding",
-    "semantic_keep_best",
-    "dbscan_core_flags",
-    "knn_graph",
-    # optimization-phase changes (batches 4-5: GEMM pair-stream persists,
-    # operators/graph.loop_width adoption, bpe vocab persist) — each was
-    # strict-verified at sf0.01 + TZ sf0.001 by the builder on change day
-    # and is covered by the end-of-round full strict sweeps:
-    "bpe_encode",
-    "bpe_learn_merges",
-    "kmeans_iterate",
-    # (pagerank also changed in the optimization phase, but it already
-    # sits in this round's window via _R10_AUDIT — the driver verifies it
-    # on the final tree, so no carryover row is owed.)
-    "bfs_hops",
-    "weighted_sssp",
-    "label_propagation",
-    # sign_projection_buckets kernel (operators/similarity.py) replaced
-    # the interpreted-HOF bucket fold; both consumers strict-verified at
-    # sf0.01 + TZ sf0.001 on change day, kernel pinned to the fold by
-    # tests/test_sign_projection.py:
-    "ann_lsh_topk",
-    "ann_lsh_recall",
-    "token_gini",
-    "token_position_profile",
-    "bucket_skew_advisor",
-    "shipment_sequence_audit",
-    "lsh_candidate_quality",
-    "duplication_profile",
-    "shingle_sensitivity",
-    "subspace_energy",
-    "label_balance_weights",
-    "supplier_fill_rate",
-    "encoding_advisor",
-    "session_funnel_pipeline",
-]
-
-_R10_WINDOW = _R10_OWED + _R10_AUDIT + _R10_PIPE
-
-# POST-LEDGER MAINTENANCE POLICY (in force since r10): with rotation debt
-# at 0, each round's 50-slot window is allocated in priority order:
-#   1. MANDATORY: every query whose builder, oracle, or any operator/
-#      function module it imports changed that round (a changed query
-#      re-earns its driver row the same round the change ships), plus
-#      any carryover owed from a previous over-subscribed window;
-#   2. any newly added catalog query (additions always debut in their
-#      add-round's window, strict+TZ-verified and x30-probed on add day);
-#   3. the remainder filled by rotating coverage of the untouched catalog
-#      in ledger order, oldest driver row first.
-#
-# R11 WINDOW (in force — optimization round 2/2): the mandatory rows are
-# _R10_CARRYOVER (25 rows — the r10 comment undercounted it as 23) PLUS
-# the seven r10-changed queries the r10 ADVICE found in neither the r10
-# window nor the carryover (countmin_sketch, nb_langid, char_ngram_profile,
-# trigram_search, poisson_bootstrap_ci, bloom_filter_join, dedup_components
-# — dedup_components' operator connected_components gained a whole new
-# execution path in r10) PLUS every query changed in r11. No r11 catalog
-# additions (optimization round). The remaining slots are rotation restart
-# from the r1 ledger rows in ledger-table order (COVERAGE.md "Rotation
-# ledger" — the r1 rows appear there starting at composite_join_inner).
-_R11_ADVICE_OWED = [
-    "countmin_sketch",
-    "nb_langid",
-    "char_ngram_profile",
-    "trigram_search",
-    "poisson_bootstrap_ci",
-    "bloom_filter_join",
-    "dedup_components",
-]
-
-# Queries whose builder/oracle or imported operator changed in r11 and
-# that are not already mandatory via the carryover lists above. Kept
-# current as each r11 optimization commit lands.
-_R11_CHANGED: list[str] = [
-    # operators/dedup.connected_components changed (bigint widening +
-    # null fall-through, r10 ADVICE): dedup_components is in
-    # _R11_ADVICE_OWED and semantic_keep_best in _R10_CARRYOVER already;
-    # dedup_keep_best is the remaining caller.
-    "dedup_keep_best",
-    # operators/graph.wedge_closure kernel (r11) replaced the wedge
-    # self-join in these two; triangle_count (same change) is already in
-    # _R10_CARRYOVER.
-    "clustering_coefficient",
-    "link_prediction_cn",
-    # lineitem pre-aggregated before the orders join (guide 2.3).
-    "interval_overlap_join",
-    # streaming/windows.py changed: the two stateful-KMV update loops
-    # were vectorized (np.union1d replaces the per-row python set fold).
-    # The REST of the streaming family imports the same module but calls
-    # none of the changed functions (run_to_memory/load_events_stream
-    # untouched) — exempt per the changed-query policy, documented here.
-    "stream_kmv_distinct",
-    "stream_windowed_kmv",
-]
-
-# Remaining slots: sources/tables.fanout_small gained a parquet
-# row-group-count check in r11. The new branch is UNREACHABLE at the
-# driver's sf0.01 verification scale (every sf0.01 table is one small
-# file, so the pre-existing `parts < target` branch fires bit-identically
-# to r10) and it only changes PARTITIONING (round-robin spread) on
-# multi-split inputs — every caller is an oracle-checked aggregation,
-# partitioning-independent by construction, and the full 392-query strict
-# sweeps cover all 40 callers. The 11 slots left after the mandatory rows
-# are nevertheless spent on the fanout callers with the heaviest
-# downstream pipelines that are NOT already in the window (instead of the
-# planned r1-ledger rotation restart, which moves to r12):
-_R11_ROTATION = [
-    "dedup_minhash",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "dedup_paragraph",
-    "ann_cosine_topk",
-    "ann_pq_adc",
-    "kmeans_assign",
-    "chi2_terms",
-    "source_tv_divergence",
-    "bigram_lm_score",
-    "countmin_error_eval",
-]
-
-_R11_WINDOW = (
-    _R10_CARRYOVER + _R11_ADVICE_OWED + _R11_CHANGED + _R11_ROTATION
-)[:50]
-
-#
-# R10 QUANTIZATION AUDIT — COMPLETED (was the "~25 sites" candidate task
-# seeded in r9). Scope grew to 56 queries once multiline-styled sites and
-# generic-addend dsum casts were enumerated. The durable conventions now
-# in force across the catalog:
-#   - FINAL outputs are raw IEEE values of engine-identical exact
-#     operands — no DECIMAL(18,N) finalization of a computed quotient
-#     anywhere (the cross-engine HALF_UP-vs-half-even shortest-repr tie
-#     class that produced calibration_bins'/seasonal_decompose's r9
-#     flips, plus a REAL divergence found this round: 5 dyadic ...0625
-#     embedding values at sf0.1 quantize differently per engine at scale
-#     12 — fixed in pca_power_iteration via fsum).
-#   - Sums of GENERIC doubles (quotients, centered values, raw float32-
-#     origin embeddings) use functions/numeric.fsum — floor-quantized
-#     exact integer sums, bit-identical across engines by construction
-#     (multiply/add/floor are exactly-defined IEEE ops). dsum remains for
-#     ON-GRID addends (integer cents, products of 2-decimal sources),
-#     where the addend sits a half-step from any tie boundary and the
-#     decimal cast is deterministic-safe.
-#   - ROUND-to-integer (scale-0) quantizations are exempt: the .5
-#     boundary is exactly representable, the shortest repr cannot cross
-#     it, and both engines round integer ties away from zero.
+# Quantization conventions every query must keep, so its output is
+# bit-identical across Spark and DuckDB:
+#   - FINAL outputs are raw IEEE values of engine-identical exact operands;
+#     no DECIMAL(18,N) finalization of a computed quotient (the two engines
+#     can round a shortest-repr tie differently).
+#   - Sums of GENERIC doubles (quotients, centered values, float32-origin
+#     embeddings) use functions/numeric.fsum: floor-quantized exact integer
+#     sums, bit-identical by construction. dsum is only for ON-GRID addends
+#     (integer cents, products of 2-decimal sources), which sit half a step
+#     from any tie boundary, so the decimal cast is deterministic.
+#   - ROUND-to-integer (scale-0) quantizations are exempt: the .5 boundary
+#     is exactly representable and both engines round integer ties away
+#     from zero.
 #   - Threshold compares (keep flags, outlier flags) run on the raw
-#     engine-identical doubles; quantizing both comparands was itself
-#     the only tie risk.
+#     engine-identical doubles; quantizing both comparands would add a tie
+#     risk.
 
 
 def load_all() -> None:
@@ -316,17 +91,5 @@ def load_all() -> None:
         queries_link,
         queries_basket,
     )
-
-    # Deterministic window rotation: pull this round's 50-query window to
-    # the front of the registry (dict order IS driver order); everything
-    # else keeps its registration order behind it.
-    missing = [n for n in _R11_WINDOW if n not in QUERIES]
-    if missing:  # a renamed query must fail loudly, not silently shrink
-        raise RuntimeError(f"_R11_WINDOW names not registered: {missing}")
-    front = {n: QUERIES[n] for n in _R11_WINDOW}
-    rest = {n: f for n, f in QUERIES.items() if n not in front}
-    QUERIES.clear()
-    QUERIES.update(front)
-    QUERIES.update(rest)
 
     _LOADED = True

@@ -1,8 +1,6 @@
 """Distributed clustering queries over the embeddings table (extension):
 the k-means Lloyd step — the primitive behind IVF index builds, data-mix
-curation, and semantic dedup. Split from queries_similarity.py so catalog
-registration order keeps the driver's 50-query correctness window aligned
-(see catalog.load_all and COVERAGE.md).
+curation, and semantic dedup. Split from queries_similarity.py.
 """
 
 from __future__ import annotations

@@ -89,19 +89,10 @@ FROM r{_ITERS}"""
 def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Damped PageRank, 5 Lloyd-style driver iterations, decimal-exact.
 
-    Lineage regime chosen by the r8 variance A/B (README probe row):
-    eager per-iteration localCheckpoint was flatter AND faster than the
-    lazy checkpoint at both sf0.1 (6.12 s med / 1.08x spread vs 7.18 /
-    1.43x) and x30 (40.8 / 1.09x vs 42.7 / 1.12x)."""
-    return _pagerank_impl(spark, sf_dir, lineage="eager")
-
-
-def _pagerank_impl(spark: SparkSession, sf_dir: str, lineage: str) -> DataFrame:
-    """PageRank loop with a switchable per-iteration lineage cut, so the
-    variance probe (scripts/pagerank_ab.py) can A/B the regimes on the
-    SAME code: "lazy" (production — localCheckpoint(eager=False), cuts
-    lineage, materializes on first use), "eager" (materialize each
-    iteration synchronously), "none" (raw 5-iteration lineage)."""
+    Each iteration's ranks are cut from the lineage with an eager
+    localCheckpoint. Measured against the lazy checkpoint (README probe
+    row), eager was flatter AND faster at both sf0.1 (6.12 s med / 1.08x
+    spread vs 7.18 / 1.43x) and x30 (40.8 / 1.09x vs 42.7 / 1.12x)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     edges = shared(symmetrize(cooccurrence_pairs(li, "l_orderkey", "l_suppkey")))
     # Materialize the edge cache at full session width (the BUILD wants the
@@ -147,12 +138,11 @@ def _pagerank_impl(spark: SparkSession, sf_dir: str, lineage: str) -> DataFrame:
                 ).alias("r"),
             )
             # Cut lineage growth per iteration (same discipline as
-            # dedup_components): ranks stays node-sized. Regime chosen by the
-            # r8 variance A/B (scripts/pagerank_ab.py, README probe table).
-            # The eager production regime is also what makes loop_width
+            # dedup_components): ranks stays node-sized. Eager checkpointing
+            # is the regime (flatter and faster than lazy at sf0.1 and x30,
+            # see the docstring); it is also what makes loop_width
             # effective: every round executes INSIDE the pinned region.
-            if lineage != "none":
-                ranks = ranks.localCheckpoint(eager=(lineage == "eager"))
+            ranks = ranks.localCheckpoint(eager=True)
     # r10 audit: ranks are raw IEEE values of fsum-exact contribution
     # sums — bit-identical per iteration on both engines, so the final
     # output needs no re-quantization.

@@ -7,8 +7,6 @@ era ran as MapReduce chains over text dumps (`EXAMPLES/WordCount.java:34`
 lineage: tokenize → count → join-back), re-expressed as single declarative
 plans so Catalyst keeps every tokenize/count/join stage JVM-side and
 map-partial-aggregated.
-
-Registered AFTER the round-3 correctness window (see `catalog.load_all`).
 """
 
 from __future__ import annotations

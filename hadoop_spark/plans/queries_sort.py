@@ -13,8 +13,9 @@ from hadoop_spark.sources.tables import load_table, shared
 
 # Oracle checks MULTISET equality (SortValidator.java:54 semantics: output ≡
 # input as a multiset); global ORDER is asserted by the partition-boundary
-# invariant test in tests/test_sort.py (TeraValidate.java:52 semantics) —
-# the driver's hash is order-insensitive so order can't be encoded here.
+# invariant test in tests/test_sort_invariants.py (TeraValidate.java:52
+# semantics) — the driver's hash is order-insensitive so order can't be
+# encoded here.
 _TOTAL_ORDER_ORACLE = """
 SELECT l_orderkey, l_linenumber, l_extendedprice
 FROM lineitem

@@ -55,9 +55,6 @@ from pyspark.sql import SparkSession
 
 from hadoop_spark import cds
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def get_session(
     app_name: str = "hadoop_spark",
     master: str | None = None,

@@ -93,7 +93,7 @@ EXCHANGE_ALLOWLIST = {"pca_power_iteration": 140}
 # - db_pageview_roundtrip boots embedded Derby (seconds of JVM work,
 #   plan shape pinned by tests/test_jdbc.py)
 # - pyds_fixed_width_roundtrip writes through the Python data source
-#   (commit protocol pinned by tests/test_pyds.py)
+#   (commit protocol pinned by tests/test_pyds_commit.py)
 SKIP = {"db_pageview_roundtrip", "pyds_fixed_width_roundtrip"}
 
 
