@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_spark.functions.hashing import portable_hash64, portable_hash64_sql
+from hadoop_spark.operators.graph import loop_width
 
 # LSH defaults: 12 minhashes in 4 bands × 3 rows → P(candidate | j=0.8) ≈ 0.94,
 # P(candidate | j=0.99) ≈ 1. Verification removes false positives exactly.
@@ -382,15 +383,11 @@ def connected_components(
 
             out = pd.DataFrame({"node": ids, "comp": ids[comp_v]})
             return spark.createDataFrame(out, "node bigint, comp bigint")
-    session_width = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    n_parts = max(2, min(session_width, n_edges // 1_000_000 + 2))
-    old_width = spark.conf.get("spark.sql.shuffle.partitions")
     # Pin BEFORE building edges: the edge cache and every loop stage inherit
-    # this width. A 60 k-edge graph under a vanilla 200-partition session
+    # the loop width. A 60 k-edge graph under a vanilla 200-partition session
     # would otherwise cache 200 partitions and launch 200-task stages every
     # round — pure scheduler overhead.
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
+    with loop_width(spark, n_edges):
         edges = pairs_m.union(
             pairs_m.select(F.col("b").alias("a"), F.col("a").alias("b"))
         ).distinct()
@@ -431,7 +428,5 @@ def connected_components(
                 break
             prev_sum = s
         comp = comp.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_width)
     edges.unpersist()
     return comp

@@ -22,10 +22,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # One shuffle partition per this many edge rows inside bounded-round
-# driver loops — the same scale-adaptive formula the connected-components
-# loop uses (operators/dedup.py). A 450 k-edge graph runs 2-wide rounds
-# (per-round cost is scheduler/task dispatch, not data); a billion-edge
-# graph gets the full session width.
+# driver loops: every such loop, the connected-components one in
+# operators/dedup.py included, pins its width through loop_width. A 450 k-edge
+# graph runs 2-wide rounds (per-round cost is scheduler/task dispatch, not
+# data); a billion-edge graph gets the full session width.
 _LOOP_ROWS_PER_PARTITION = 1_000_000
 
 

@@ -2,24 +2,52 @@
 
 The reference's flagship UDF story is piping records through any executable
 via stdin/stdout (`hadoop-tools/hadoop-streaming/.../PipeMapper.java:39`,
-`PipeReducer.java:41`; process spawn `PipeMapRed.java:207`), with a stderr
-side-channel for counters (`reporter:counter:<group>,<name>,<amount>`).
+`PipeReducer.java:41`), with a stderr side-channel for counters
+(`reporter:counter:<group>,<name>,<amount>`). Every script there runs
+through one process driver, `PipeMapRed` (spawn `PipeMapRed.java:207`,
+output/err threads `:293`). Here that driver is :func:`_run`; the five
+public functions are front-ends that differ only in how a row is encoded,
+how stdout is decoded and what happens to stderr.
 
 Spark-first translation: the Arrow-batched Python worker IS the modern
 version of this (every pandas UDF is "streaming" in the reference's sense),
-so :func:`pipe` exists for literal script parity — `-mapper /bin/grep`-style
+so this module exists for literal script parity — `-mapper /bin/grep`-style
 jobs — and is the ONE deliberate drop below the DataFrame API in this engine
-(SURVEY §7 risk (a)). It rides `RDD.pipe`, which spawns the command once per
-partition and streams lines through it — same process lifecycle as the
-reference's one-process-per-task.
+(SURVEY §7 risk (a)).
 
-Scale: one subprocess per partition (not per row); throughput is bounded by
-the pipe and the external binary, exactly like Hadoop Streaming. Counters
-ride a Spark accumulator, the direct analogue of the reference's counter
-RPC (`MR-CORE/mapreduce/Counters.java:41`).
+Process contract, the same for every front-end:
+
+- One process per partition (not per row), like the reference's
+  one-process-per-task. A writer thread feeds stdin while stdout is read
+  incrementally, so memory per task is O(pipe buffer) and a partition
+  larger than the pipe buffer cannot deadlock.
+- A command string runs under ``/bin/sh``. A shipped script runs as
+  ``shlex.split(interpreter) + [SparkFiles.get(name)]``.
+- The process inherits the executor's environment.
+- Text is UTF-8, one line per row, framed by ``\\n`` in both directions
+  (binary pipes: no locale dependence, no universal-newline translation).
+  A NULL line is skipped. Typed bytes has no NULL, so a NULL value fails
+  the task, as it would in the reference.
+- A command that stops reading early (``head``) is not an error. A writer
+  or stderr-drain exception fails the task, and so does a nonzero exit
+  unless ``check_exit=False``.
+- stderr goes to the worker's stderr (the executor log). The counter
+  variants parse the ``reporter:counter:`` and ``reporter:status:`` lines
+  out of it and forward the rest.
+
+Scale: throughput is bounded by the pipe and the external binary, exactly
+like Hadoop Streaming. Counters ride a Spark accumulator or the dataflow
+itself, the analogues of the reference's counter RPC
+(`MR-CORE/mapreduce/Counters.java:41`).
 """
 
 from __future__ import annotations
+
+import itertools
+import os
+import shlex
+import subprocess
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,6 +90,125 @@ def _check_exit(proc, command: str, check_exit: bool) -> None:
         raise RuntimeError(f"piped command {command!r} exited with code {rc}")
 
 
+def _run(rows, command, encode, decode, check_exit: bool, drain=None):
+    """Pipe one partition's `rows` through one process and yield what
+    `decode` reads from its stdout.
+
+    `command` is a shell string or an ``(interpreter argv, shipped file
+    name)`` pair from :func:`_ship`. `encode(row)` gives the bytes a row
+    writes to stdin. `drain(stderr)`, if given, consumes stderr on its own
+    thread; otherwise the process inherits the worker's stderr."""
+    if isinstance(command, str):
+        args, label = command, command
+    else:
+        from pyspark import SparkFiles
+
+        interpreter, name = command
+        args = [*interpreter, SparkFiles.get(name)]
+        label = " ".join([*interpreter, name])
+    proc = subprocess.Popen(
+        args,
+        shell=isinstance(command, str),
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        stderr=None if drain is None else subprocess.PIPE,
+    )
+
+    def feed():
+        try:
+            for r in rows:
+                proc.stdin.write(encode(r))
+        except BrokenPipeError:
+            pass  # the command stopped reading (e.g. head): not an error
+        finally:
+            try:
+                proc.stdin.close()
+            except BrokenPipeError:
+                pass
+
+    threads = [_spawn_captured(feed)]
+    if drain is not None:
+        threads.append(_spawn_captured(lambda: drain(proc.stderr)))
+    yield from decode(proc.stdout)
+    for thread, _ in threads:
+        thread.join()
+    for _, err in threads:
+        if err:
+            raise err[0]
+    _check_exit(proc, label, check_exit)
+
+
+def _lines(df: DataFrame, line_col: str | None):
+    """The text line each row sends, as an RDD of one-field rows:
+    `line_col`, the single column, or a tab-joined rendering of all
+    columns (TextOutputFormat's wire format, what a Hadoop Streaming
+    mapper would have seen). NULL lines are dropped."""
+    if line_col is None and len(df.columns) > 1:
+        line = F.concat_ws("\t", *[F.col(c).cast("string") for c in df.columns])
+    else:
+        line = F.col(line_col or df.columns[0]).cast("string")
+    return df.select(line.alias("line")).filter(F.col("line").isNotNull()).rdd
+
+
+def _encode_line(row) -> bytes:
+    return row[0].encode("utf-8") + b"\n"
+
+
+def _decode_lines(stdout):
+    for raw in stdout:
+        yield (raw.rstrip(b"\n").decode("utf-8"),)
+
+
+def _line_frame(spark: SparkSession, rdd, out_col: str) -> DataFrame:
+    return spark.createDataFrame(
+        rdd, StructType([StructField(out_col, StringType(), True)])
+    )
+
+
+def _drain_reporter(stderr, counts: dict, status: list) -> None:
+    """The streaming stderr protocol (`PipeMapRed.java`): sum
+    ``reporter:counter:group,name,amount`` lines into `counts`, keep the
+    last ``reporter:status:text`` in `status` (the task's status line, like
+    the reference's TaskReporter.setStatus), and forward every other line,
+    a malformed counter line included, to the worker's stderr."""
+    for raw in stderr:
+        line = raw.rstrip(b"\n").decode("utf-8", "replace")
+        if line.startswith(COUNTER_PREFIX):
+            try:
+                group, name, amount = line[len(COUNTER_PREFIX):].split(",", 2)
+                counts[group, name] = counts.get((group, name), 0) + int(amount)
+                continue
+            except ValueError:
+                pass
+        elif line.startswith(STATUS_PREFIX):
+            status[:] = [line[len(STATUS_PREFIX):]]
+            continue
+        sys.stderr.write(line + "\n")
+    sys.stderr.flush()
+
+
+def _ship(spark: SparkSession, script_path: str, interpreter: str):
+    """Hadoop Streaming's ``-file`` flag: ship a local script to every
+    executor and return the :func:`_run` command for its task-local copy.
+    The reference stages the file in the DistributedCache
+    (`MR-CORE/mapreduce/filecache/DistributedCache.java:107`); Spark's
+    `sc.addFile` + `SparkFiles.get` is the same push-once-per-node
+    mechanism — at 1000 executors the script uploads once to the cluster,
+    not once per task. `interpreter` is shlex-split, so ``"python3 -u"``
+    works."""
+    spark.sparkContext.addFile(script_path)
+    return shlex.split(interpreter), os.path.basename(script_path)
+
+
+def _pipe_text(df: DataFrame, command, line_col, out_col, check_exit) -> DataFrame:
+    def run_partition(rows):
+        return _run(rows, command, _encode_line, _decode_lines, check_exit)
+
+    return _line_frame(
+        df.sparkSession, _lines(df, line_col).mapPartitions(run_partition), out_col
+    )
+
+
 def pipe(
     df: DataFrame,
     command: str,
@@ -78,18 +225,7 @@ def pipe(
 
     `check_exit` mirrors the reference's `stream.non.zero.exit.is.failure`
     (default true): the task fails if the command exits nonzero."""
-    spark = df.sparkSession
-    if line_col is not None:
-        lines = df.select(F.col(line_col).cast("string"))
-    elif len(df.columns) == 1:
-        lines = df.select(F.col(df.columns[0]).cast("string"))
-    else:
-        lines = df.select(
-            F.concat_ws("\t", *[F.col(c).cast("string") for c in df.columns])
-        )
-    piped = lines.rdd.map(lambda r: r[0]).pipe(command, checkCode=check_exit)
-    schema = StructType([StructField(out_col, StringType(), True)])
-    return spark.createDataFrame(piped.map(lambda line: (line,)), schema)
+    return _pipe_text(df, command, line_col, out_col, check_exit)
 
 
 def pipe_with_counters(
@@ -114,103 +250,31 @@ def pipe_with_counters(
     :func:`pipe_with_counter_rows`, which emits counters as data and is
     exactly-once per action (tested in tests/test_pipe_counters.py).
 
-    Implementation note: RDD.pipe exposes stdout only, so the counter
-    variant runs the subprocess via mapPartitions + subprocess and parses
-    stderr per partition. I/O is fully streamed — a writer thread feeds
-    stdin row-by-row while stdout is consumed incrementally and stderr is
-    drained on its own thread (the reference's exact architecture:
-    `PipeMapRed.java:293` output/err threads) — so memory per task is
-    O(pipe buffer), not O(partition), and a partition larger than the OS
-    pipe buffer cannot deadlock. Writer/stderr-thread exceptions are
-    captured and re-raised on the task thread (a silent thread death would
-    truncate the partition); nonzero subprocess exit fails the task unless
-    `check_exit=False`."""
-    import subprocess
+    Implementation note: stderr is drained on its own thread while stdout
+    streams (the reference's `PipeMapRed.java:293` output/err threads); the
+    partition's counts and last status line are added to the accumulators
+    once its process has exited cleanly."""
+    from pyspark import TaskContext
 
     spark = df.sparkSession
     acc = CounterAccumulator(spark)
-
-    if line_col is not None:
-        lines = df.select(F.col(line_col).cast("string"))
-    elif len(df.columns) == 1:
-        lines = df.select(F.col(df.columns[0]).cast("string"))
-    else:
-        lines = df.select(
-            F.concat_ws("\t", *[F.col(c).cast("string") for c in df.columns])
-        )
-
-    counters = acc.acc
-    cmd = command
+    counters, statuses = acc.acc, acc.status_acc
 
     def run_partition(rows):
-        proc = subprocess.Popen(
-            cmd,
-            shell=True,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
+        counts: dict[tuple[str, str], int] = {}
+        status: list[str] = []
+        yield from _run(
+            rows, command, _encode_line, _decode_lines, check_exit,
+            lambda stderr: _drain_reporter(stderr, counts, status),
         )
-        local: dict[tuple[str, str], int] = {}
+        if counts:
+            counters.add(counts)
+        if status:
+            ctx = TaskContext.get()
+            statuses.add({ctx.partitionId() if ctx else -1: status[0]})
 
-        def feed_stdin():
-            try:
-                for r in rows:
-                    if r[0] is not None:
-                        proc.stdin.write(r[0] + "\n")
-            except BrokenPipeError:
-                pass  # command exited early (e.g. head) — not an error
-            finally:
-                try:
-                    proc.stdin.close()
-                except BrokenPipeError:
-                    pass
-
-        last_status: list[str] = []
-
-        def drain_stderr():
-            for eline in proc.stderr:
-                eline = eline.rstrip("\n")
-                if eline.startswith(COUNTER_PREFIX):
-                    try:
-                        group, name, amount = eline[len(COUNTER_PREFIX):].split(",", 2)
-                        key = (group, name)
-                        local[key] = local.get(key, 0) + int(amount)
-                    except ValueError:
-                        pass
-                elif eline.startswith(STATUS_PREFIX):
-                    # reporter:status:<text> (PipeMapRed stderr protocol):
-                    # the task's human-readable status line; LAST one wins,
-                    # like the reference's TaskReporter.setStatus.
-                    status = eline[len(STATUS_PREFIX):]
-                    if last_status:
-                        last_status[0] = status
-                    else:
-                        last_status.append(status)
-
-        writer, werr = _spawn_captured(feed_stdin)
-        errt, eerr = _spawn_captured(drain_stderr)
-        for line in proc.stdout:
-            yield (line.rstrip("\n"),)
-        writer.join()
-        errt.join()
-        if werr:
-            raise werr[0]
-        if eerr:
-            raise eerr[0]
-        _check_exit(proc, cmd, check_exit)
-        if local:
-            counters.add(local)
-        if last_status:
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-            statuses.add({pid: last_status[0]})
-
-    statuses = acc.status_acc
-    schema = StructType([StructField(out_col, StringType(), True)])
-    out_df = spark.createDataFrame(lines.rdd.mapPartitions(run_partition), schema)
-    return out_df, acc
+    rdd = _lines(df, line_col).mapPartitions(run_partition)
+    return _line_frame(spark, rdd, out_col), acc
 
 
 def pipe_with_counter_rows(
@@ -239,68 +303,18 @@ def pipe_with_counter_rows(
     pass over the subprocess (the partition runs once; the two frames are
     filters of the same cached combined output), so consuming both does
     not re-run the external command."""
-    import subprocess
-
     from pyspark.sql.types import LongType
 
-    spark = df.sparkSession
-    if line_col is not None:
-        lines = df.select(F.col(line_col).cast("string"))
-    elif len(df.columns) == 1:
-        lines = df.select(F.col(df.columns[0]).cast("string"))
-    else:
-        lines = df.select(
-            F.concat_ws("\t", *[F.col(c).cast("string") for c in df.columns])
-        )
-    cmd = command
+    from hadoop_spark.sources.tables import shared
 
     def run_partition(rows):
-        proc = subprocess.Popen(
-            cmd,
-            shell=True,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            stderr=subprocess.PIPE,
-            text=True,
-        )
-        local: dict[tuple[str, str], int] = {}
-
-        def feed_stdin():
-            try:
-                for r in rows:
-                    if r[0] is not None:
-                        proc.stdin.write(r[0] + "\n")
-            except BrokenPipeError:
-                pass
-            finally:
-                try:
-                    proc.stdin.close()
-                except BrokenPipeError:
-                    pass
-
-        def drain_stderr():
-            for eline in proc.stderr:
-                eline = eline.rstrip("\n")
-                if eline.startswith(COUNTER_PREFIX):
-                    try:
-                        group, name, amount = eline[len(COUNTER_PREFIX):].split(",", 2)
-                        key = (group, name)
-                        local[key] = local.get(key, 0) + int(amount)
-                    except ValueError:
-                        pass
-
-        writer, werr = _spawn_captured(feed_stdin)
-        errt, eerr = _spawn_captured(drain_stderr)
-        for line in proc.stdout:
-            yield (line.rstrip("\n"), None, None, None)
-        writer.join()
-        errt.join()
-        if werr:
-            raise werr[0]
-        if eerr:
-            raise eerr[0]
-        _check_exit(proc, cmd, check_exit)
-        for (group, name), amount in sorted(local.items()):
+        counts: dict[tuple[str, str], int] = {}
+        for (line,) in _run(
+            rows, command, _encode_line, _decode_lines, check_exit,
+            lambda stderr: _drain_reporter(stderr, counts, []),
+        ):
+            yield (line, None, None, None)
+        for (group, name), amount in sorted(counts.items()):
             yield (None, group, name, amount)
 
     schema = StructType(
@@ -311,10 +325,10 @@ def pipe_with_counter_rows(
             StructField("__camount", LongType(), True),
         ]
     )
-    from hadoop_spark.sources.tables import shared
-
     combined = shared(
-        spark.createDataFrame(lines.rdd.mapPartitions(run_partition), schema)
+        df.sparkSession.createDataFrame(
+            _lines(df, line_col).mapPartitions(run_partition), schema
+        )
     )
     out_df = combined.filter(F.col("__cgroup").isNull()).select(out_col)
     counters_df = (
@@ -336,64 +350,10 @@ def pipe_shipped_script(
     check_exit: bool = True,
 ) -> DataFrame:
     """Hadoop Streaming's ``-file`` flag: ship a local script to every
-    executor and pipe through it. The reference stages the file in the
-    DistributedCache (`MR-CORE/mapreduce/filecache/DistributedCache.java:107`,
-    streaming's StreamJob `-file` handling); Spark's `sc.addFile` +
-    `SparkFiles.get` is the same push-once-per-node mechanism — at 1000
-    executors the script uploads once to the cluster, not once per task."""
-    import os
-
-    spark = df.sparkSession
-    spark.sparkContext.addFile(script_path)
-    name = os.path.basename(script_path)
-
-    # Resolve the cached copy lazily ON THE EXECUTOR (SparkFiles.get gives
-    # the task-local path), not on the driver.
-    if line_col is not None:
-        lines = df.select(F.col(line_col).cast("string"))
-    elif len(df.columns) == 1:
-        lines = df.select(F.col(df.columns[0]).cast("string"))
-    else:
-        lines = df.select(
-            F.concat_ws("\t", *[F.col(c).cast("string") for c in df.columns])
-        )
-
-    def run_partition(rows):
-        import subprocess
-
-        from pyspark import SparkFiles
-
-        local = SparkFiles.get(name)
-        proc = subprocess.Popen(
-            [interpreter, local],
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            text=True,
-        )
-
-        def feed():
-            try:
-                for r in rows:
-                    if r[0] is not None:
-                        proc.stdin.write(r[0] + "\n")
-            except BrokenPipeError:
-                pass
-            finally:
-                try:
-                    proc.stdin.close()
-                except BrokenPipeError:
-                    pass
-
-        t, terr = _spawn_captured(feed)
-        for line in proc.stdout:
-            yield (line.rstrip("\n"),)
-        t.join()
-        if terr:
-            raise terr[0]
-        _check_exit(proc, f"{interpreter} {name}", check_exit)
-
-    schema = StructType([StructField(out_col, StringType(), True)])
-    return spark.createDataFrame(lines.rdd.mapPartitions(run_partition), schema)
+    executor (see :func:`_ship`) and pipe text lines through it, run as
+    ``shlex.split(interpreter) + [its task-local copy]``."""
+    command = _ship(df.sparkSession, script_path, interpreter)
+    return _pipe_text(df, command, line_col, out_col, check_exit)
 
 
 # ----------------------------------------------------------- typed bytes
@@ -538,87 +498,35 @@ def pipe_typedbytes(
     each input row's columns are written as consecutive typed-bytes records
     to the command's stdin; stdout is decoded as typed-bytes and regrouped
     into rows of `out_schema` (DDL string, e.g. ``"word string, n bigint"``
-    — field count sets the regrouping arity). One subprocess per partition,
-    streamed I/O (writer thread + incremental stdout reads), same process
-    lifecycle as :func:`pipe_with_counters`. Nulls are not representable in
-    the reference protocol and are rejected, as the reference would — the
-    rejection raises INSIDE the writer thread, so it is captured and
+    — field count sets the regrouping arity). Nulls are not representable
+    in the reference protocol and are rejected, as the reference would —
+    the rejection raises INSIDE the writer thread, so it is captured and
     re-raised on the task thread (not a silent truncation).
 
-    ``ship_script``: local path shipped to every executor via
-    ``sc.addFile`` (streaming's ``-file`` + ``-io typedbytes`` combination
-    — `DistributedCache.java:107`); ``command`` is then the interpreter
-    (shlex-split, so flagged interpreters like ``"python3 -u"`` work
-    instead of failing at task time as a nonexistent executable name),
-    and the executor runs ``shlex.split(command) +
-    [SparkFiles.get(basename)]`` with the task-local cached copy —
-    push-once-per-node, not once per task."""
-    import os
-    import shlex
-    import subprocess
-
+    ``ship_script``: local path shipped to every executor (streaming's
+    ``-file`` + ``-io typedbytes`` combination, see :func:`_ship`);
+    ``command`` is then the interpreter, and the executor runs
+    ``shlex.split(command) + [SparkFiles.get(basename)]``."""
     spark = df.sparkSession
-    n_in = len(df.columns)
-    cmd = command
-    script_name = None
-    interp_argv = None
     if ship_script is not None:
-        spark.sparkContext.addFile(ship_script)
-        script_name = os.path.basename(ship_script)
-        interp_argv = shlex.split(cmd)
-
-    def run_partition(rows):
-        if script_name is not None:
-            from pyspark import SparkFiles
-
-            argv = interp_argv + [SparkFiles.get(script_name)]
-            proc = subprocess.Popen(
-                argv,
-                stdin=subprocess.PIPE,
-                stdout=subprocess.PIPE,
-                text=False,
-            )
-        else:
-            proc = subprocess.Popen(
-                cmd,
-                shell=True,
-                stdin=subprocess.PIPE,
-                stdout=subprocess.PIPE,
-                text=False,
-            )
-
-        def feed_stdin():
-            try:
-                for r in rows:
-                    for i in range(n_in):
-                        proc.stdin.write(tb_encode(r[i]))
-            except BrokenPipeError:
-                pass
-            finally:
-                try:
-                    proc.stdin.close()
-                except BrokenPipeError:
-                    pass
-
-        writer, werr = _spawn_captured(feed_stdin)
-        buf = []
-        for value in tb_decode_stream(proc.stdout):
-            buf.append(value)
-            if len(buf) == n_out:
-                yield tuple(buf)
-                buf = []
-        writer.join()
-        if werr:
-            raise werr[0]
-        if buf:
-            raise ValueError(
-                f"typed-bytes: trailing {len(buf)} values do not fill a row"
-            )
-        _check_exit(proc, cmd, check_exit)
-
+        command = _ship(spark, ship_script, command)
     out_struct = StructType.fromDDL(out_schema)
     n_out = len(out_struct.fields)
+
+    def run_partition(rows):
+        values = _run(rows, command, _encode_tb_row, tb_decode_stream, check_exit)
+        while row := tuple(itertools.islice(values, n_out)):
+            if len(row) < n_out:
+                raise ValueError(
+                    f"typed-bytes: trailing {len(row)} values do not fill a row"
+                )
+            yield row
+
     return spark.createDataFrame(df.rdd.mapPartitions(run_partition), out_struct)
+
+
+def _encode_tb_row(row) -> bytes:
+    return b"".join(map(tb_encode, row))
 
 
 class CounterAccumulator:

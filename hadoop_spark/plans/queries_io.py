@@ -739,7 +739,8 @@ def partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     job's output dir; `MultipleOutputs` routes but never replaces): write
     the full event log partitioned by event_type, then OVERWRITE exactly
     one partition (the 'error' slice, values doubled) in a second job.
-    With partitionOverwriteMode=dynamic only partitions present in the
+    With the writer option partitionOverwriteMode=dynamic (read ahead of
+    the session conf, which is left alone) only partitions present in the
     incoming data are replaced — the other partitions' files are not
     rewritten (asserted in tests/test_partition_overwrite.py), which at
     100 TB is the difference between rewriting one day's slice and
@@ -750,19 +751,14 @@ def partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     path = _scratch(sf_dir, "po_events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        (
-            ev.filter(F.col("event_type") == "error")
-            .withColumn("value", (F.col("value") * 2).cast("decimal(18,4)"))
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(mode_key, prev)
+    (
+        ev.filter(F.col("event_type") == "error")
+        .withColumn("value", (F.col("value") * 2).cast("decimal(18,4)"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(path)
+    )
     # explicit schema: a zero-row write leaves no files to infer from
     back = spark.read.schema(ev.schema).parquet(path)
     return back.groupBy("event_type").agg(
@@ -1814,18 +1810,13 @@ def distcp_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3. re-copy ONLY the changed partitions (dynamic overwrite commits
     # per-partition; untouched partitions' files are not rewritten)
     if changed:
-        mode_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(mode_key, "static")
-        spark.conf.set(mode_key, "dynamic")
-        try:
-            (
-                snap_b.filter(F.col("event_type").isin(changed))
-                .write.mode("overwrite")
-                .partitionBy("event_type")
-                .parquet(mirror)
-            )
-        finally:
-            spark.conf.set(mode_key, prev)
+        (
+            snap_b.filter(F.col("event_type").isin(changed))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("event_type")
+            .parquet(mirror)
+        )
         # refresh the manifest so the NEXT sync diffs against current
         # mirror state — reuse the already-computed source fingerprints
         # (no second source scan; same O(#partitions) write)

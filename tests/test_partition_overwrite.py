@@ -33,18 +33,18 @@ def test_dynamic_overwrite_leaves_other_partitions_alone(spark, tmp_path):
     before_error = _files(path, "error")
     assert before_other and before_error
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            ev.filter(F.col("event_type") == "error")
-            .withColumn("value", (F.col("value") * 2).cast("decimal(18,4)"))
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # the writer option, as the engine uses it: the session conf (static by
+    # default) must neither be needed nor be changed
+    session_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
+    (
+        ev.filter(F.col("event_type") == "error")
+        .withColumn("value", (F.col("value") * 2).cast("decimal(18,4)"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(path)
+    )
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == session_mode
 
     # untouched partition: identical file set, sizes, and mtimes
     assert _files(path, "purchase") == before_other

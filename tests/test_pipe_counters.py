@@ -4,6 +4,11 @@ accumulator), mirroring hadoop-streaming's PipeMapRed counter plumbing."""
 
 from __future__ import annotations
 
+import io
+
+import pytest
+
+import hadoop_spark.operators.pipe as pipe_mod
 from hadoop_spark.operators.pipe import pipe, pipe_with_counters
 from hadoop_spark.sources.tables import load_table
 
@@ -159,3 +164,88 @@ def test_pipe_status_protocol(spark):
     assert set(statuses.values()) == {"finished cleanly"}
     assert len(statuses) == 2  # one per partition
     assert counters.value() == {("io", "done"): 2}
+
+
+# The process contract every text front-end shares (operators/pipe.py module
+# docstring). Each case: input lines, a shell command (None: no string-command
+# front-end applies), the equivalent shipped script and its interpreter (None:
+# the shipped front-end does not apply), and the expected output; None there
+# means the executor's PATH.
+_CONTRACT_CASES = {
+    "null_row_skipped": (
+        ["a", None, "b"],
+        "cat",
+        ("import sys\nsys.stdout.write(sys.stdin.read())\n", "python3"),
+        ["a", "b"],
+    ),
+    "shell_command": (["a", "b", "c"], "head -1; exit 0", None, ["a"]),
+    "executor_path": (
+        ["a"],
+        'printf "%s\\n" "$PATH"',
+        ("import os\nprint(os.environ['PATH'])\n", "python3"),
+        None,
+    ),
+    "flagged_interpreter": (
+        ["a", "b"],
+        None,
+        ("import sys\nsys.stdout.write(sys.stdin.read().upper())\n", "python3 -u"),
+        ["A", "B"],
+    ),
+}
+_TEXT_FRONTS = ("pipe", "pipe_with_counters", "pipe_with_counter_rows", "pipe_shipped_script")
+
+
+def _contract_params():
+    for case, (_lines, command, shipped, _want) in _CONTRACT_CASES.items():
+        for front in _TEXT_FRONTS:
+            if (shipped if front == "pipe_shipped_script" else command) is not None:
+                yield pytest.param(front, case, id=f"{front}-{case}")
+
+
+@pytest.mark.parametrize("front,case", list(_contract_params()))
+def test_text_pipe_contract(spark, tmp_path, front, case):
+    """NULL rows are skipped, a command string runs under /bin/sh, the child
+    inherits the executor's environment, and a shipped script's interpreter
+    is shlex-split — the same on every text front-end."""
+    import os
+
+    lines, command, shipped, want = _CONTRACT_CASES[case]
+    df = spark.createDataFrame([(v,) for v in lines], "v string").coalesce(1)
+    if front == "pipe_shipped_script":
+        source, interpreter = shipped
+        # SparkFiles caches by file name: one name per script content
+        script = tmp_path / f"contract_{case}.py"
+        script.write_text(source)
+        out = pipe_mod.pipe_shipped_script(df, str(script), interpreter=interpreter)
+    else:
+        out = getattr(pipe_mod, front)(df, command)
+        if front != "pipe":
+            out = out[0]
+    if want is None:
+        want = [spark.sparkContext.parallelize([0], 1).map(lambda _: os.environ["PATH"]).first()]
+    try:
+        assert [r.line for r in out.collect()] == want
+    finally:
+        spark.catalog.clearCache()
+
+
+def test_reporter_drain_forwards_other_stderr(capsys):
+    """The counter variants' stderr drain: protocol lines are parsed, every
+    other line (a malformed counter line included) goes on to stderr, as the
+    reference passes it to the task log."""
+    counts, status = {}, []
+    pipe_mod._drain_reporter(
+        io.BytesIO(
+            b"reporter:counter:io,lines,2\n"
+            b"not a counter line\n"
+            b"reporter:status:halfway\n"
+            b"reporter:counter:io,lines,3\n"
+            b"reporter:counter:io,no-amount\n"
+            b"reporter:status:done\n"
+        ),
+        counts,
+        status,
+    )
+    assert counts == {("io", "lines"): 5}
+    assert status == ["done"]
+    assert capsys.readouterr().err == "not a counter line\nreporter:counter:io,no-amount\n"

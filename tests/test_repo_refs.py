@@ -37,3 +37,26 @@ def test_referenced_repo_paths_exist():
                     missing.append(f"{src.relative_to(ROOT)}:{lineno}: {ref}")
     assert refs, "the scan found no references at all"
     assert missing == []
+
+
+def test_trace_hooks_resolve():
+    """perfbench's tracer rebinds every ``(module, name)`` in its
+    ``WRAPPED`` table, so an engine rename would break ``--trace 1`` runs,
+    which the test suite does not exercise. Read the table without
+    importing perfbench and resolve each hook."""
+    import ast
+    import importlib
+
+    tree = ast.parse((ROOT / "perfbench" / "tracing.py").read_text())
+    (wrapped,) = [
+        ast.literal_eval(node.value)
+        for node in tree.body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "WRAPPED" for t in node.targets)
+    ]
+    assert wrapped, "WRAPPED is empty"
+    broken = []
+    for module, names, _span in wrapped:
+        mod = importlib.import_module(module)
+        broken += [f"{module}.{n}" for n in names if not callable(getattr(mod, n, None))]
+    assert broken == []
