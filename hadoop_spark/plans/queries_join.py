@@ -1043,13 +1043,13 @@ GROUP BY o_custkey
 """
 
 
-_REC_CHAIN_BOUNDS: dict[tuple[str, float], int] = {}
+_REC_CHAIN_BOUNDS: dict[tuple, int] = {}
 
 
 @query("recursive_order_chain", _REC_CHAIN_SQL)
 def recursive_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE clamped-balance walk over each customer's orders."""
-    from hadoop_spark.sources.tables import register_views
+    from hadoop_spark.sources.tables import _file_identity, register_views
 
     register_views(spark, sf_dir)
     # The recursion's true size is n_customers + n_orders rows total
@@ -1059,19 +1059,14 @@ def recursive_order_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     # EXECUTES, so instead raise it to a DATA-BOUNDED value (4x the exact
     # row budget) — the runaway-recursion valve stays armed for any
     # genuinely divergent recursion that runs later in the same session.
-    import os as _os
-
-    # cache key carries the fixture's mtime so a regenerated dataset at
-    # the same path can't serve a stale (too-small) bound
-    try:
-        mt = _os.path.getmtime(f"{sf_dir}/orders.parquet")
-    except OSError:
-        mt = 0.0
-    key = (sf_dir, mt)
-    if key not in _REC_CHAIN_BOUNDS:
-        n_orders = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
-        n_cust = spark.read.parquet(f"{sf_dir}/customer.parquet").count()
-        _REC_CHAIN_BOUNDS[key] = max(1_000_000, 4 * (n_orders + n_cust))
+    # The bound is kept per identity of BOTH input files, so a regenerated
+    # table at the same path can't serve a stale (too-small) bound; inputs
+    # without a local identity are counted on every call.
+    inputs = ("orders", "customer")
+    key = tuple(_file_identity(f"{sf_dir}/{t}.parquet") for t in inputs)
+    if None in key or key not in _REC_CHAIN_BOUNDS:
+        n_rows = sum(load_table(spark, sf_dir, t).count() for t in inputs)
+        _REC_CHAIN_BOUNDS[key] = max(1_000_000, 4 * n_rows)
     # The conf is session-global and the plan is lazy: set the MAX over
     # every bound seen this session, so two interleaved lazy plans over
     # different datasets both execute under a sufficient valve (the last

@@ -7,13 +7,31 @@ table is a parquet path and the DataSource framework computes the splits.
 Column pruning + predicate pushdown reach the scan automatically — the
 capability the reference had to hand-build per-format
 (`SequenceFileInputFilter.java:49`).
+
+In Hadoop the record schema comes with the file; Spark instead runs a
+one-task job to read the footer whenever a parquet read is given no schema.
+`load_table` therefore infers a local file's schema once and afterwards
+passes it to `spark.read.schema(...)`, so repeat loads start no job:
+
+- key: the file's `(st_dev, st_ino, st_size, st_mtime_ns)` plus the session
+  confs that decide the parquet→Spark type mapping (`_SCHEMA_CONFS`); a
+  rewritten file or a flipped conf misses and is inferred again, and the
+  dict is keyed by path, so the new entry replaces the old one;
+- bypass: whatever `os.stat` does not show as a regular file (directories,
+  URIs, missing paths) is inferred on every call, as `spark.read.parquet`
+  does;
+- only `StructType`s are kept, never DataFrames, so nothing is bound to one
+  session.
 """
 
 from __future__ import annotations
 
+import os
+import stat
 import warnings
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -41,11 +59,53 @@ def _prep(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
+# The session confs Spark 4.1's parquet schema inference reads
+# (`ParquetFileFormat.mergeSchemasInParallel`).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+
+# path -> (file identity + _SCHEMA_CONFS values, inferred schema)
+_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _file_identity(path: str) -> tuple[int, int, int, int] | None:
+    """`(st_dev, st_ino, st_size, st_mtime_ns)` of a local regular file, or
+    None for anything else: a directory, a URI (`hdfs://…`, `file:…`) or a
+    path `os.stat` cannot read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` that infers a local file's schema once
+    (see the module docstring for the cache contract)."""
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = ident + tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    hit = _schemas.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _schemas[path] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _prep(spark)
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,7 +120,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType, TimestampNTZType
 
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

@@ -285,10 +285,12 @@ def load_events_stream(spark, sf_dir: str) -> DataFrame:
     legacy int64 nanos truncate ns→µs."""
     from pyspark.sql.types import LongType, TimestampNTZType
 
+    from hadoop_spark.sources.tables import _read_parquet
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = _read_parquet(spark, path).schema
     # shape check through the Hadoop FileSystem API, not os.path: the
     # dataset may live on non-local storage (hdfs://, s3a://), where a
     # driver-local isdir() is always False and would silently route a
