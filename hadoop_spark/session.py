@@ -44,6 +44,22 @@ first action (``cds.py`` has the lifecycle). There is no option for it.
   written afresh. To clear the cache: ``rm -r ~/.cache/hadoop_spark/cds``.
 - Sessions built without ``get_session`` (the external driver's vanilla
   session in ``scripts/drive_contract.py``) are unaffected.
+
+Generated code: Spark keeps the classes it compiles (whole-stage code and
+expressions) in one LRU cache per JVM of
+``spark.sql.codegen.cache.maxEntries`` entries, 100 by default.
+- An LRU cache smaller than a cyclic working set misses on every access.
+  The 20-query ``interactive`` perfbench mix generates ~185 classes, so
+  with 100 every replay of it recompiled 130-175 of them at 7-15 ms each.
+  A ``batch_mixed`` pass generates ~64 and fits either way. One run of the
+  whole 392-query catalog at sf0.001 generates ~4 500.
+- The cap is 8192, the smallest power of two that holds the catalog. An
+  entry costs at most ~20 KB of metaspace (the catalog run took it from
+  17 to 106 MB), so a full cache is ~0.16 GB; entries cost only when they
+  fill.
+- It is a static conf: like CDS it takes effect only when ``get_session``
+  starts the JVM, and a later session of the same process keeps the cache
+  it found. ``extra_conf`` can still override it.
 """
 
 from __future__ import annotations
@@ -93,6 +109,9 @@ def get_session(
         # in recv) — measured 5-20x wall-clock inflation on the blocked-GEMM
         # cogroup. TCP transport has none of this.
         .config("spark.python.unix.domain.socket.enabled", "false")
+        # Holds every class the catalog generates (docstring): the default
+        # 100 is smaller than one interactive mix, so LRU misses each time.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     conf = dict(extra_conf or {})
     # One JVM serves every session of a Python process; CDS applies only when

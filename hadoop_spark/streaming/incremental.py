@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_spark.streaming.windows import drain
+
 
 def _version_dirs(path: str) -> list[tuple[int, str]]:
     if not os.path.isdir(path):
@@ -55,12 +57,13 @@ def stream_merge_to_snapshot(
     key: str,
     version_col: str,
     query_name: str = "merge_stream",
-    timeout_sec: int = 120,
+    timeout_sec: float = 120,
 ):
     """Run `stream_df` (availableNow) through foreachBatch, merging each
     micro-batch into the versioned snapshot at `snapshot_path`: within a
     batch the highest `version_col` per key wins, then merge_upsert applies
-    the batch onto the previous version. Returns after the stream drains."""
+    the batch onto the previous version. Returns after the stream drains;
+    raises TimeoutError if it has not drained within `timeout_sec`."""
     from hadoop_spark.operators.cdc import merge_upsert
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -85,16 +88,4 @@ def stream_merge_to_snapshot(
         )
         .start()
     )
-    try:
-        # awaitTermination(timeout) returns False when the stream is still
-        # running at the deadline; the finally would then kill it mid-drain
-        # and callers would read a stale/partial snapshot as if it were
-        # complete — surface that as an error instead.
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"incremental merge stream {query_name!r} did not drain "
-                f"within {timeout_sec}s; snapshot at {snapshot_path} is partial"
-            )
-    finally:
-        q.stop()
+    drain(q, timeout_sec, f"snapshot at {snapshot_path}")

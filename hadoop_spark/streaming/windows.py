@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from hadoop_spark.functions.numeric import dsum
 
@@ -330,11 +331,12 @@ def run_to_memory(
     query_name: str,
     output_mode: str = "complete",
     watermark: tuple[str, str] | None = None,
-    timeout_sec: int = 120,
+    timeout_sec: float = 120,
 ):
     """Execute a streaming plan with availableNow (process everything, then
     stop) into an in-memory sink; returns the sink's rows. `watermark` is
-    applied by the CALLER's builder (needs to precede the aggregation)."""
+    applied by the CALLER's builder (needs to precede the aggregation).
+    Raises TimeoutError if the stream has not drained within `timeout_sec`."""
     spark = stream_df.sparkSession
     q = (
         stream_df.writeStream.format("memory")
@@ -343,11 +345,23 @@ def run_to_memory(
         .trigger(availableNow=True)
         .start()
     )
+    drain(q, timeout_sec, f"memory sink {query_name!r}")
+    return spark.sql(f"SELECT * FROM {query_name}")  # noqa: S608
+
+
+def drain(q: StreamingQuery, timeout_sec: float, output: str) -> None:
+    """Wait for an availableNow query to finish, then stop it.
+
+    awaitTermination(timeout) returns False when the stream is still running
+    at the deadline; stopping it then would leave `output` holding a partial
+    result that callers read as complete, so that raises TimeoutError."""
     try:
-        q.awaitTermination(timeout_sec)
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"stream {q.name!r} did not drain within {timeout_sec}s; {output} is partial"
+            )
     finally:
         q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")  # noqa: S608
 
 
 def stateful_kmv_distinct(events: DataFrame, k: int = 64) -> DataFrame:

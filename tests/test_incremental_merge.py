@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_spark.sources.tables import load_table
@@ -80,3 +81,20 @@ def test_batch_retry_is_idempotent(spark, tmp_path):
     got = sorted(map(tuple, inc.current_snapshot(spark, snap).collect()))
     assert got == [(1, 10, "a"), (2, 10, "b")]
     assert len(inc._version_dirs(snap)) == 1
+
+
+def test_stream_merge_raises_when_stream_has_not_drained(spark, tmp_path):
+    src = str(tmp_path / "src")
+    events = load_table(spark, SF_DIR, "events")
+    events.select("user_id", F.unix_micros("ts").alias("v")).write.parquet(src)
+    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    with pytest.raises(TimeoutError, match="is partial"):
+        stream_merge_to_snapshot(
+            stream,
+            str(tmp_path / "snapshot"),
+            key="user_id",
+            version_col="v",
+            query_name="t_merge_timeout",
+            timeout_sec=0.01,
+        )
+    assert not [q for q in spark.streams.active if q.name == "t_merge_timeout"]

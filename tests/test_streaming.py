@@ -5,6 +5,7 @@ exactly the closed windows in append mode."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_spark.sources.tables import load_table
@@ -80,3 +81,12 @@ def test_stream_static_enrich_equals_batch(spark):
     got = run_to_memory(stream, "t_enrich", output_mode="complete")
     want = stream_static_enrich(load_table(spark, SF_DIR, "events"), dim)
     assert _rows(got) == _rows(want)
+
+
+def test_run_to_memory_raises_when_stream_has_not_drained(spark):
+    """A stream still running at the deadline is stopped and reported, not
+    returned as if its partial memory sink were the whole result."""
+    stream = tumbling_counts(load_events_stream(spark, SF_DIR))
+    with pytest.raises(TimeoutError, match="t_tumble_timeout"):
+        run_to_memory(stream, "t_tumble_timeout", output_mode="complete", timeout_sec=0.01)
+    assert not [q for q in spark.streams.active if q.name == "t_tumble_timeout"]
